@@ -1,0 +1,12 @@
+import os
+import sys
+
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+)
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "smoke: end-to-end benchmark runs at tiny sizes (minutes)"
+    )
